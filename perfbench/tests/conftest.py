@@ -1,0 +1,6 @@
+import os
+import sys
+
+# the benchmark's modules import each other by bare name, as run.py does
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [HERE, os.path.dirname(HERE)]
